@@ -232,11 +232,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     from itertools import zip_longest
 
-    # Round 13: no gate-contract changes (registry frozen per the r12
-    # verdict's tail-drain mandate, third consecutive round). Keep the
-    # pin list empty so the full prefix drains never-sampled names
-    # (tail 166 -> target <=116).
-    resample_first = ()
+    # Pinned: the queries whose code was rewritten in round 14 and has
+    # not been hash-matched by the driver since — the plan-shape
+    # rewrites, the ln-factorial family, and every query behind the
+    # driver-local Lloyd/PQ/logreg/tfidf shortcuts (the sizing.py
+    # fits_driver gates).
+    resample_first = (
+        "suffix_array_corpus", "k_truss_copurchase", "tfidf_cosine_pairs",
+        "pagerank_parts", "textrank_keywords", "als_one_sweep_rmse",
+        "co_purchase_triangles", "local_clustering_parts",
+        "logreg_purchase_model", "median_ci_order_stats",
+        "fisher_exact_weekend_purchase", "bayes_ab_prob_purchase",
+        "rarefaction_curve_sources", "kmeans_corpus_cells", "knn_ivf",
+        "knn_ivfpq", "knn_pq_adc", "semdedup_corpus",
+        "hard_negative_pairs_ann", "dunn_index_int_cells",
+        "adjusted_rand_index_cells", "vmeasure_nmi_cells",
+        "bcubed_cluster_eval",
+    )
     ROTATION_ROUND = 13
     by_module: dict[str, list[tuple[str, Callable]]] = {}
     for name, fn in Q.QUERIES.items():

@@ -1,9 +1,11 @@
-"""Capture .explain('formatted') for round-13 target queries.
+"""Capture .explain('formatted') for a set of queries.
 
-Usage: python scripts/capture_plans_r13.py <before|after> query [query ...]
-Writes plans/r13/<query>_<tag>.txt. Note: iterative operators embed
-localCheckpoint leaves, so the formatted plan covers the final fragment
-(from the last checkpoint on); construction-time sizing counts execute.
+Usage: python scripts/capture_plans.py ROUND TAG query [query ...]
+Writes plans/<ROUND>/<query>_<TAG>.txt (e.g. ROUND=r15, TAG=before)
+for the scale factor in SPARK_GRAFT_SF_DIR. Note: iterative operators
+embed localCheckpoint leaves, so the formatted plan covers the final
+fragment (from the last checkpoint on); construction-time sizing
+counts execute.
 """
 
 from __future__ import annotations
@@ -13,24 +15,22 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from zoom_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag in ("before", "after"), tag
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("capture-plans-r13")
+    spark = get_spark(f"capture-plans-{rnd}")
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r13",
-    )
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)

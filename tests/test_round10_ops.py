@@ -404,6 +404,7 @@ def test_dunn_index_matches_python_over_fit(spark):
     plain python over the collected quantized vectors."""
     from zoom_spark.queries.round10_ops import dunn_index_int_cells
     from zoom_spark.queries.similarity_queries import (
+        EMBED_DIM,
         KMEANS_ITERS,
         KMEANS_K,
         KMEANS_QSCALE,
@@ -412,7 +413,7 @@ def test_dunn_index_matches_python_over_fit(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     base = int_quantize(emb, "embedding", "vec_id", KMEANS_QSCALE)
-    cents = int_lloyd_fit(base, k=KMEANS_K, iters=KMEANS_ITERS)
+    cents = int_lloyd_fit(base, k=KMEANS_K, iters=KMEANS_ITERS, dim=EMBED_DIM)
     vecs = [list(map(int, r["vec"])) for r in base.collect()]
 
     def d2(a, b):
@@ -684,12 +685,12 @@ def test_nation_rank_stability_matches_pandas(spark):
     assert abs(r["spearman_rho"] - rho) < 1e-6
 
 
-def test_int_lloyd_local_path_matches_distributed(spark):
+def test_int_lloyd_local_path_matches_distributed(spark, monkeypatch):
     """r14: the gated driver-local numpy Lloyd path must be BITWISE
     identical to the distributed per-iteration path (same md5 seeds,
     same first-minimum tie-break, same IEEE mean division + shared
     floor(m+0.5) snap, empty cells dropped without relabel)."""
-    import zoom_spark.similarity.kmeans as km
+    import zoom_spark.operators.sizing as sizing
     from tests.conftest import SF_DIR
     from zoom_spark.io import load_table
     from zoom_spark.similarity.kmeans import int_lloyd_fit, int_quantize
@@ -698,11 +699,7 @@ def test_int_lloyd_local_path_matches_distributed(spark):
     base = int_quantize(emb, "embedding", "vec_id", 1_000_000).localCheckpoint(
         eager=False
     )
-    local = int_lloyd_fit(base, k=8, iters=3)
-    prev = km.LLOYD_LOCAL_MAX
-    try:
-        km.LLOYD_LOCAL_MAX = -1  # force the distributed path
-        dist = int_lloyd_fit(base, k=8, iters=3)
-    finally:
-        km.LLOYD_LOCAL_MAX = prev
+    local = int_lloyd_fit(base, k=8, iters=3, dim=64)
+    monkeypatch.setattr(sizing, "DRIVER_MAX_CELLS", -1)  # distributed path
+    dist = int_lloyd_fit(base, k=8, iters=3, dim=64)
     assert local == dist

@@ -73,16 +73,15 @@ def solve_side(
     solve (VᵀV + λI)x = Vᵀr per `solve_col` group. Returns
     (solve_col, vec).
 
-    ``fixed_rows``: the caller's COUNTED size of `fixed`. Factor frames
-    are checkpointed (unknown stats), so the planner sort-merge-joins
-    the full ratings frame against an entity-sized factor table; a
-    counted row bound lets us broadcast the factor side instead and
-    leave the ratings frame unshuffled. Fails closed to the shuffle
-    join past BCAST_MAX_ROWS (billions of entities)."""
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    ``fixed_rows``: the caller's COUNTED size of `fixed`. Without a
+    hint the planner sort-merge-joins the full ratings frame against
+    the checkpointed, entity-sized factor table; the counted row bound
+    lets us broadcast the factor side instead and leave the ratings
+    frame unshuffled (``sizing.broadcast_if``)."""
+    from zoom_spark.operators.sizing import broadcast_if
 
-    if fixed_rows is not None and fixed_rows <= BCAST_MAX_ROWS:
-        fixed = F.broadcast(fixed)
+    if fixed_rows is not None:
+        fixed = broadcast_if(fixed_rows)(fixed)
     joined = ratings.join(fixed, on=fixed_col).select(
         solve_col, rating_col, "vec"
     )
@@ -159,10 +158,9 @@ def predict_rmse(
     baseline). JVM-side dot product (zip_with + aggregate).
 
     ``user_rows`` / ``item_rows``: counted factor-frame sizes; same
-    gated-broadcast contract as solve_side (fails closed past
-    BCAST_MAX_ROWS)."""
+    gated-broadcast contract as solve_side."""
     from zoom_spark.functions.vectors import dot
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    from zoom_spark.operators.sizing import broadcast_if
 
     if user_fac is None:
         scored = ratings.select(
@@ -171,10 +169,10 @@ def predict_rmse(
     else:
         uf = user_fac.withColumnRenamed("vec", "uvec")
         vf = item_fac.withColumnRenamed("vec", "ivec")
-        if user_rows is not None and user_rows <= BCAST_MAX_ROWS:
-            uf = F.broadcast(uf)
-        if item_rows is not None and item_rows <= BCAST_MAX_ROWS:
-            vf = F.broadcast(vf)
+        if user_rows is not None:
+            uf = broadcast_if(user_rows)(uf)
+        if item_rows is not None:
+            vf = broadcast_if(item_rows)(vf)
         scored = (
             ratings.join(uf, on=user_col)
             .join(vf, on=item_col)

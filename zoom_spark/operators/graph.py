@@ -17,23 +17,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zoom_spark.operators.sizing import frame_partitions
+from zoom_spark.operators.sizing import (
+    broadcast_if,
+    fits_broadcast,
+    frame_partitions,
+)
 
 # ord key = degree * ORD_BASE + node_id: a single BIGINT total order
 # (degree-major, id tie-break) that both sides of every comparison
 # share. Node ids must stay below ORD_BASE.
 ORD_BASE = 1_000_000_000
-
-# Row budget for broadcasting node-sized per-round frames (scores,
-# labels, frontiers) inside iterative loops. Checkpointed loop frames
-# scan as ExistingRDD with unknown stats, so Catalyst/AQE never
-# auto-broadcasts them and every round re-shuffles the full edge
-# frame for a sort-merge join; an explicit hint removes that exchange.
-# Gated on a COUNTED upper bound (never an estimate): a few million
-# (key, value) rows is tens of MB framed — comfortably inside executor
-# memory — while at 100 TB (billions of nodes) the gate fails closed
-# and the loop keeps the plain shuffle join it has today.
-BCAST_MAX_ROWS = 4_000_000
 
 
 def orient_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -80,7 +73,7 @@ def _oriented_triangles(
     closing vertices are array_intersect(adj[a], adj[b]) — both are
     out-neighbors, and a triangle's unique generator is its
     lowest-(degree, id) edge. r14: this adjacency-intersection shape
-    (already the k_truss enumerator) replaces the wedge self-join in
+    (also the k_truss enumerator) replaces the wedge self-join in
     triangle_count/local_clustering — wedges can be ~20x the triangle
     count, and the wedge rows all crossed an exchange (A/B at sf0.1
     on the co-purchase graph, per-node counts: 6.7-8.2 s wedge join
@@ -326,16 +319,11 @@ def label_propagation_communities(
     n_parts = frame_partitions(sc, n_sym)
     sym = sym.repartition(n_parts, "b").localCheckpoint(eager=False)
     # The label frame holds one row per node (<= n_sym rows), so the
-    # already-paid count gates a per-round broadcast hint: label frames
-    # are checkpointed RDD scans with unknown stats, and without the
-    # hint every round re-shuffles the edge frame for the vote join
+    # already-paid count gates a per-round broadcast hint: without it
+    # every round re-shuffles the edge frame for the vote join
     # (r13 A/B at sf0.1: community_labels 8.2 s shuffle vs 5.0 s
-    # broadcast, identical results); fails closed at billion-node scale.
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if n_sym <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    # broadcast, identical results).
+    bcast = broadcast_if(n_sym)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -387,10 +375,9 @@ def hits(
     raw score frame fans out to 2 consumers per half-step, so unlike
     pagerank's pure chain this loop MUST checkpoint). The node-sized
     score frames are broadcast into the edge join when the counted
-    edge total bounds them under ``BCAST_MAX_ROWS`` — checkpointed
-    frames scan with unknown stats, so without the hint every
-    half-step re-shuffles the edge frame (r13 A/B at sf0.1: 7.0 s
-    shuffle vs 5.2 s broadcast, identical results).
+    edge total bounds them (``sizing.fits_broadcast``) — without the
+    hint every half-step re-shuffles the edge frame (r13 A/B at
+    sf0.1: 7.0 s shuffle vs 5.2 s broadcast, identical results).
 
     ``quantize_dp`` snaps both score vectors to a fixed decimal grid
     (the repo's shared HALF-UP floor(x*10^dp+0.5) spelling) after
@@ -417,16 +404,12 @@ def hits(
     )
     # Each score frame holds one row per distinct hub/auth node, so
     # n_edges bounds both row counts — one already-paid count gates the
-    # per-round broadcast hints without an extra job (see BCAST_MAX_ROWS;
-    # the score frames themselves must stay checkpointed because each
-    # half-step's raw frame fans out to 2 consumers: the L2 normalizer
-    # and the next join — a chain-style uncheckpointed loop would
-    # duplicate every prior round's subplan 2x per round).
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if n_edges <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    # per-round broadcast hints without an extra job (the score frames
+    # themselves must stay checkpointed because each half-step's raw
+    # frame fans out to 2 consumers: the L2 normalizer and the next
+    # join — a chain-style uncheckpointed loop would duplicate every
+    # prior round's subplan 2x per round).
+    bcast = broadcast_if(n_edges)
     auths = (
         e.select(F.col("auth").alias("node")).distinct().withColumn("a", F.lit(1.0))
     )
@@ -519,12 +502,13 @@ def k_truss(
     optimization) instead of re-enumerating all triangles per round:
 
     1. Enumerate triangles ONCE by degree-oriented adjacency
-       intersection: orient every edge low→high (degree, id) order,
-       build each node's out-neighbor set (bounded ~sqrt(m) by the
-       orientation), then per edge (a,b) the third vertices are
-       array_intersect(adj[a], adj[b]) — one groupBy plus one keyed
-       join of the edge list against the node-sized adjacency table;
-       no wedge-row shuffle (wedges can be 20x the triangle count).
+       intersection (``_oriented_triangles``): orient every edge
+       low→high (degree, id) order, build each node's out-neighbor
+       set (bounded ~sqrt(m) by the orientation), then per edge (a,b)
+       the third vertices are array_intersect(adj[a], adj[b]) — one
+       groupBy plus one keyed join of the edge list against the
+       node-sized adjacency table; no wedge-row shuffle (wedges can
+       be 20x the triangle count).
     2. The triangle table T is checkpointed and NEVER rewritten in
        the loop. Deleted edges accumulate in a death-round-tagged set
        D; each round flags T against D (broadcast when small — three
@@ -552,23 +536,32 @@ def k_truss(
     if not assume_deduped:
         cur = cur.distinct()
     cur = cur.localCheckpoint(eager=False)
-    oriented = orient_edges(cur, src="u", dst="v").localCheckpoint(
-        eager=False
-    )
-    adj = oriented.groupBy("src").agg(F.collect_set("dst").alias("nbrs"))
+    # The packing below needs 0 <= id < ORD_BASE (this module's
+    # contract); check it once, in setup — a violating id would alias
+    # another edge's key and silently corrupt the supports.
+    lo, hi = cur.agg(
+        F.min(F.least("u", "v")), F.max(F.greatest("u", "v"))
+    ).first()
+    for bad in (lo, hi):
+        if bad is not None and not 0 <= bad < ORD_BASE:
+            raise ValueError(
+                f"k_truss node id {bad} outside [0, {ORD_BASE})"
+            )
+    # r14: every loop-state frame keys edges by ONE packed BIGINT
+    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids are
+    # < ORD_BASE (1e9 < 2^31), so the packing is collision-free and
+    # order-exact; it halves the bytes scanned and hash-probed by the
+    # per-round triangle flagging (measured on the 1.88M-triangle
+    # sf0.1 co-purchase graph: 0.67 s -> 0.25 s per flag pass). tri
+    # carries (e1, e2, e3); u/v re-emerge only in the final projection
+    # via exact div/mod.
+    _PACK = 1 << 31
+
+    def _pack(u, v):
+        return F.col(u) * F.lit(_PACK) + F.col(v)
+
     tri = (
-        oriented.select("src", "dst")
-        .join(
-            adj.select(F.col("src").alias("_a"), F.col("nbrs").alias("na")),
-            on=F.col("src") == F.col("_a"),
-        )
-        .join(
-            adj.select(F.col("src").alias("_b"), F.col("nbrs").alias("nb")),
-            on=F.col("dst") == F.col("_b"),
-        )
-        .select(
-            "src", "dst", F.explode(F.array_intersect("na", "nb")).alias("w")
-        )
+        _oriented_triangles(cur)
         .select(
             F.least("src", "dst").alias("u1"),
             F.greatest("src", "dst").alias("v1"),
@@ -577,25 +570,9 @@ def k_truss(
             F.least("dst", "w").alias("u3"),
             F.greatest("dst", "w").alias("v3"),
         )
+        .select(*[_pack(f"u{i}", f"v{i}").alias(f"e{i}") for i in (1, 2, 3)])
+        .localCheckpoint(eager=False)
     )
-    # r14: every loop-state frame keys edges by ONE packed BIGINT
-    # _ek = u * 2^31 + v instead of the (u, v) pair. Node ids are
-    # < ORD_BASE (1e9 < 2^31) by this module's contract, so the packing
-    # is collision-free and order-exact; it halves the bytes scanned
-    # and hash-probed by the per-round triangle flagging (measured on
-    # the 1.88M-triangle sf0.1 co-purchase graph: 0.67 s -> 0.25 s per
-    # flag pass). tri carries (e1, e2, e3); u/v re-emerge only in the
-    # final projection via exact div/mod.
-    _PACK = 1 << 31
-
-    def _pack(u, v):
-        return u * F.lit(_PACK) + v
-
-    tri = tri.select(
-        _pack(F.col("u1"), F.col("v1")).alias("e1"),
-        _pack(F.col("u2"), F.col("v2")).alias("e2"),
-        _pack(F.col("u3"), F.col("v3")).alias("e3"),
-    ).localCheckpoint(eager=False)
     support = (
         tri.select(
             F.explode(F.array("e1", "e2", "e3")).alias("_ek")
@@ -604,7 +581,7 @@ def k_truss(
         .agg(F.count("*").cast("bigint").alias("support"))
     )
     sup0 = (
-        cur.select(_pack(F.col("u"), F.col("v")).alias("_ek"))
+        cur.select(_pack("u", "v").alias("_ek"))
         .join(support, on="_ek", how="left")
         .select(
             "_ek",
@@ -614,20 +591,19 @@ def k_truss(
         )
         .localCheckpoint(eager=False)
     )
-    BCAST_MAX = 2_000_000  # rows of (u, v, *) kept broadcastable
     # One up-front edge count (it materializes the sup0 checkpoint the
     # first peel round would otherwise materialize — no extra pass).
     # BOTH loop-state frames are keyed by edge — d_cum holds dead
-    # edges, dec_cum is groupBy(u, v)-compacted — so each is provably
-    # <= n_edges rows. When the whole edge set fits the broadcast
-    # budget, every per-round broadcast gate is decided HERE and the
-    # per-round dec_cum.count() jobs (r13: one full tri-scan job per
-    # round, HALF the peel cost) disappear: the lazy checkpoints chain
-    # into the next round's batch.count(). Past the budget, the loop
-    # keeps the r13 shape exactly (counted gates + giant-cascade
-    # compaction) — fails closed at 100 TB.
+    # edges, dec_cum is groupBy(_ek)-compacted — so each is provably
+    # <= n_edges rows of two BIGINTs. When the whole edge set fits the
+    # broadcast budget, every per-round broadcast gate is decided HERE
+    # and the per-round dec_cum.count() jobs (r13: one full tri-scan
+    # job per round, HALF the peel cost) disappear: the lazy
+    # checkpoints chain into the next round's batch.count(). Past the
+    # budget, the loop keeps the r13 shape exactly (counted gates +
+    # giant-cascade compaction).
     n_edges = sup0.count()
-    edges_bcastable = n_edges <= BCAST_MAX
+    edges_bcastable = fits_broadcast(n_edges)
 
     def _sup_now(base, dec_cum, small):
         """Current support = frozen base support minus accumulated
@@ -670,9 +646,9 @@ def k_truss(
         # "no alive positive-support edge is sub-threshold".
         batch = (
             _not_dead(
-                _sup_now(sup0, dec_cum, n_dec <= BCAST_MAX),
+                _sup_now(sup0, dec_cum, fits_broadcast(n_dec)),
                 d_cum,
-                n_dead <= BCAST_MAX,
+                fits_broadcast(n_dead),
             )
             .where((F.col("supn") < k - 2) & (F.col("supn") > 0))
             .select("_ek", F.lit(rnd).alias("died"))
@@ -687,7 +663,7 @@ def k_truss(
             else d_cum.unionByName(batch).localCheckpoint(eager=False)
         )
         n_dead += n_active
-        small = n_dead <= BCAST_MAX
+        small = fits_broadcast(n_dead)
         flagged = tri
         for i in (1, 2, 3):
             d_i = d_cum.select(
@@ -739,7 +715,7 @@ def k_truss(
         # materializes the checkpoint this round would force anyway on
         # first reuse; the count gates next round's broadcast hints
         n_dec = dec_cum.count()
-        if not small or n_dec > BCAST_MAX:
+        if not small or not fits_broadcast(n_dec):
             # giant-cascade compaction (the 100 TB regime where the
             # peeled set stops being model-sized): fold decrements into
             # a fresh base support, shrink T to live triangles, reset
@@ -764,7 +740,7 @@ def k_truss(
     u_type = cur.schema["u"].dataType.simpleString()
     v_type = cur.schema["v"].dataType.simpleString()
     return (
-        _sup_now(sup0, dec_cum, n_dec <= BCAST_MAX)
+        _sup_now(sup0, dec_cum, fits_broadcast(n_dec))
         .where(F.col("supn") >= k - 2)
         .select(
             # exact integer unpack (DIV, not fp division — packed keys

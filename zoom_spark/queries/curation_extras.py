@@ -410,6 +410,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     its full-probe-equals-baseline property test."""
     from pyspark.sql import Window
 
+    from zoom_spark.queries.similarity_queries import EMBED_DIM
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_lloyd_fit,
@@ -430,7 +431,7 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production contract
     n_probe = 3
     cents = int_lloyd_fit(
-        base, k=k, iters=HNA_ITERS, n_rows=n,
+        base, k=k, iters=HNA_ITERS, n_rows=n, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", HNA_QSCALE),
     )
     dotl = lambda u, v: F.aggregate(  # noqa: E731
@@ -498,18 +499,16 @@ def hard_negative_pairs_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / 1e6
     )
-    # Gated broadcasts (the already-paid n count): nv and qv are
-    # vector-corpus-sized but checkpoint-derived (unknown stats), so the
-    # planner sort-merge-joined the 3*N^1.5 candidate stream against
-    # them — the wrong side to shuffle. Fails closed past BCAST_MAX_ROWS.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # Gated broadcasts (the already-paid n count): nv and qv hold <= n
+    # rows, and without the hint the planner sort-merge-joined the
+    # 3*N^1.5 candidate stream against them — the wrong side to shuffle.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    nv_j = F.broadcast(nv) if n <= BCAST_MAX_ROWS else nv
-    qv_j = F.broadcast(qv) if n <= BCAST_MAX_ROWS else qv
+    bc = broadcast_if(n)
     cand = (
-        probes.join(nv_j, on="cell")
+        probes.join(bc(nv), on="cell")
         .where(F.col("q_id") != F.col("id"))
-        .join(qv_j, on="q_id")
+        .join(bc(qv), on="q_id")
         .where(F.col("q_label") != F.col("label"))
         .select(
             F.col("q_id").alias("vec_id"),

@@ -201,6 +201,7 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the whole keep/drop decision is bit-deterministic
     with NO float snap schedule.  The float-centroid general
     operator (dedup/semdedup.semdedup) stays property-tested."""
+    from zoom_spark.queries.similarity_queries import EMBED_DIM
     from zoom_spark.similarity.kmeans import (
         int_assign,
         int_lloyd_fit,
@@ -213,7 +214,7 @@ def semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id", SEMDEDUP_QSCALE
     ).localCheckpoint(eager=False)
     cents = int_lloyd_fit(
-        base, k=SEMDEDUP_K, iters=SEMDEDUP_ITERS,
+        base, k=SEMDEDUP_K, iters=SEMDEDUP_ITERS, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", SEMDEDUP_QSCALE),
     )
     dotl = lambda u, v: F.aggregate(  # noqa: E731

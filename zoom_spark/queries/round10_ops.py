@@ -1318,18 +1318,14 @@ def morans_i_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
     )
     # Gated broadcast of the node-sized attribute table into the edge-
-    # moment join: x is checkpointed (unknown stats), so the planner
-    # sort-merge-joined the full edge frame against it twice. The count
+    # moment join: without it the planner sort-merge-joined the full
+    # edge frame against the checkpointed x twice. The count
     # materializes the checkpoint the nodes agg reads anyway; BIGINT
     # moments are summation-order exact, so the plan change cannot move
-    # the result. Fails closed past BCAST_MAX_ROWS.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # the result.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if x.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcast_if(x.count())
     xu = x.select(F.col("node").alias("u"), F.col("x").alias("xu"))
     xv = x.select(F.col("node").alias("v"), F.col("x").alias("xv"))
     edges = (
@@ -1531,6 +1527,7 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance^2 is an exact 64-term integer sum, so min/max/ratio are
     bit-deterministic; the centroid-pair scan is model-sized."""
     from zoom_spark.queries.similarity_queries import (
+        EMBED_DIM,
         KMEANS_ITERS,
         KMEANS_K,
         KMEANS_QSCALE,
@@ -1547,7 +1544,7 @@ def dunn_index_int_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id", KMEANS_QSCALE
     ).localCheckpoint(eager=False)
     cents = int_lloyd_fit(
-        base, k=KMEANS_K, iters=KMEANS_ITERS,
+        base, k=KMEANS_K, iters=KMEANS_ITERS, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", KMEANS_QSCALE),
     )
     # model-sized driver math: exact integer min inter-centroid dist^2
@@ -2019,19 +2016,13 @@ def katz_centrality_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-round walk-count frame p holds one row per node
     # (<= counted edge rows) — broadcast it into the edge join so each
     # round stays map-side over the checkpointed edge frame instead of
-    # re-shuffling it for a sort-merge join (checkpointed scans carry
-    # unknown stats, so the planner never does this itself; r13 A/B at
-    # sf0.1: 4.4 s shuffle vs 3.1 s broadcast, identical results).
-    # Past the row budget the gate fails closed to today's shuffle
-    # join; p must stay checkpointed — each round's frame fans out to
-    # the next join AND its path_cols leg.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # re-shuffling it for a sort-merge join (r13 A/B at sf0.1: 4.4 s
+    # shuffle vs 3.1 s broadcast, identical results).
+    # p must stay checkpointed — each round's frame fans out to the
+    # next join AND its path_cols leg.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if e.count() <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcast_if(e.count())
     p = e.select(F.col("u").alias("node")).distinct().withColumn(
         "p", F.lit(1).cast("long")
     )
@@ -2160,14 +2151,10 @@ def gearys_c_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
     )
     # Same gated broadcast as morans_i_copurchase: node-sized attribute
-    # table vs the full edge frame, BIGINT-exact sums, fails closed.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # table vs the full edge frame, BIGINT-exact sums.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if x.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcast_if(x.count())
     xu = x.select(F.col("node").alias("u"), F.col("x").alias("xu"))
     xv = x.select(F.col("node").alias("v"), F.col("x").alias("xv"))
     edges = (

@@ -7631,20 +7631,14 @@ def luby_maximal_independent_set(
     # n_vertices was always counted for the output; counting it BEFORE
     # the e-build lets the same paid count gate broadcast hints on every
     # node-sized frame below (prio here; nbrmin/c/rm in the rounds —
-    # each holds <= n_vertices rows by construction). Checkpointed
-    # frames scan as ExistingRDD with unknown stats, so without the
-    # hint every round sort-merge-joins the edge frame against tables a
+    # each holds <= n_vertices rows by construction). Without the hint
+    # every round sort-merge-joins the edge frame against tables a
     # groupBy/distinct just proved are node-sized (r13 A/B at sf0.1:
-    # 5.65 s shuffle vs 5.15 s broadcast, identical results); fails
-    # closed to the shuffle join at billion-node scale.
-    n_vertices = v.count()
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # 5.65 s shuffle vs 5.15 s broadcast, identical results).
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda df: F.broadcast(df))
-        if n_vertices <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    n_vertices = v.count()
+    bc = broadcast_if(n_vertices)
     e = (
         sup.join(
             bc(prio.select(F.col("x").alias("xu"), F.col("p").alias("pu_"))),
@@ -7737,6 +7731,7 @@ def _cells_vs_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells (the kmeans/semdedup/IVF shared fit) and the embedding
     labels."""
     from zoom_spark.queries.similarity_queries import (
+        EMBED_DIM,
         KMEANS_ITERS,
         KMEANS_K,
         KMEANS_QSCALE,
@@ -7754,6 +7749,7 @@ def _cells_vs_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         base,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
+        dim=EMBED_DIM,
         cache_key=lloyd_cache_key(
             sf_dir, "embeddings", "embedding", KMEANS_QSCALE
         ),

@@ -2143,19 +2143,12 @@ def harmonic_centrality_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Broadcast gate for the per-round (seed, node) frames: settled/
     # frontier rows are bounded by HC_SEEDS * |V| (counted, never
-    # estimated). Checkpointed frames scan with unknown stats, so
-    # without the hint every BFS round re-shuffles the full edge frame
-    # for a sort-merge join (r13 A/B at sf0.1: 10.5 s shuffle vs
-    # 5.4-7.6 s broadcast, identical results); past the budget —
-    # the billion-node regime — the gate fails closed and the rounds
-    # keep today's shuffle join (operators/graph.BCAST_MAX_ROWS).
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # estimated). Without the hint every BFS round re-shuffles the full
+    # edge frame for a sort-merge join (r13 A/B at sf0.1: 10.5 s shuffle vs
+    # 5.4-7.6 s broadcast, identical results).
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bcast = (
-        (lambda df: F.broadcast(df))
-        if HC_SEEDS * nodes.count() <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bcast = broadcast_if(HC_SEEDS * nodes.count())
     d = F.broadcast(seeds).select(
         "s", F.col("s").alias("node"), F.lit(0).alias("dist")
     ).localCheckpoint(eager=False)

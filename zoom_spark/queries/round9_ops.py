@@ -1124,19 +1124,13 @@ def louvain_moves_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = eu.count()
     # Broadcast gate for the node-sized per-round frames (labels,
     # degrees, community totals): every one holds <= |V| <= 2m rows,
-    # so the already-paid edge count bounds them all. Checkpointed
-    # loop frames scan with unknown stats — without the hints each
-    # round re-shuffles the full symmetrized edge frame for the vote
+    # so the already-paid edge count bounds them all. Without the hints
+    # each round re-shuffles the full symmetrized edge frame for the vote
     # join (r13 A/B at sf0.1: 12.2 s shuffle vs 7.5 s broadcast,
-    # identical results); past the budget the gate fails closed and
-    # the loop keeps today's shuffle joins.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # identical results).
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda df: F.broadcast(df))
-        if 2 * m <= BCAST_MAX_ROWS
-        else (lambda df: df)
-    )
+    bc = broadcast_if(2 * m)
     lab = deg.select("node", F.col("node").alias("community"))
     for _ in range(LOUVAIN_ROUNDS):
         tot = (

@@ -401,7 +401,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id", IVF_QSCALE
     ).localCheckpoint(eager=False)
     cents = int_lloyd_fit(
-        base, k=IVF_K, iters=IVF_ITERS,
+        base, k=IVF_K, iters=IVF_ITERS, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", IVF_QSCALE),
     )
     dotl = lambda u, v: F.aggregate(  # noqa: E731
@@ -571,7 +571,7 @@ def kmeans_corpus_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id", KMEANS_QSCALE
     ).localCheckpoint(eager=False)
     cents = int_lloyd_fit(
-        base, k=KMEANS_K, iters=KMEANS_ITERS,
+        base, k=KMEANS_K, iters=KMEANS_ITERS, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", KMEANS_QSCALE),
     )
     return (
@@ -703,14 +703,6 @@ def _knn_pq_oracle_sql() -> str:
 # codes frame — and on a hit the final encode pass still runs.
 _PQ_TRAIN_CACHE: dict[tuple, list[tuple[int, int, list[int]]]] = {}
 
-# Row budget for the driver-local PQ training path (subvector rows =
-# N x PQ_M): the collect is a few MB at the bound — the same
-# model-artifact size class as the per-iteration codebook collects the
-# distributed path already does. Past it, the iterative distributed
-# trainer runs unchanged (fails closed at 100 TB).
-PQ_LOCAL_MAX = 400_000
-
-
 def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = None):
     """Train all PQ_M integer codebooks at once over a (vec_id, sub,
     dd, x) frame (seeds: the PQ_CODES smallest md5(vec_id) rows of
@@ -788,17 +780,18 @@ def _int_pq_train(ids: DataFrame, sdim: DataFrame, cache_key: tuple | None = Non
             codes = assign_frame(cb).select("vec_id", "sub", "cell")
             return codes.localCheckpoint(eager=False), cent_frame(cb)
 
-    # r14: a model-sized subvector frame (N x PQ_M rows; the gate
-    # fails closed at scale) trains faster with ONE collect + numpy
-    # than with PQ_ITERS sequential Spark jobs (each assign + M-step
-    # job paid ~1 s of scheduler + interpreted-HOF latency at sf0.1).
+    # r14: a model-sized subvector frame (N x PQ_M rows of PQ_SUBDIM
+    # ints) trains faster with ONE collect + numpy than with PQ_ITERS
+    # sequential Spark jobs (each assign + M-step job paid ~1 s of
+    # scheduler + interpreted-HOF latency at sf0.1).
     # Bitwise-identical arithmetic: int64 dots are exact, np.argmin
     # takes the FIRST minimum (= the lowest cell id over the sorted
     # cell list), seeds order by the same (md5(str(vec_id)), vec_id)
     # key, and the M-step divides the double-cast exact int sum by the
     # count in the same IEEE division before the shared floor(m+0.5).
-    n_sv = svec.count()
-    if n_sv <= PQ_LOCAL_MAX:
+    from zoom_spark.operators.sizing import fits_driver
+
+    if fits_driver(svec.count(), PQ_SUBDIM):
         import hashlib as _hashlib
         import math as _math
 
@@ -1087,7 +1080,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id", PQ_QSCALE
     ).localCheckpoint(eager=False)
     cents = int_lloyd_fit(
-        base, k=IVFPQ_CELLS, iters=IVF_ITERS,
+        base, k=IVFPQ_CELLS, iters=IVF_ITERS, dim=EMBED_DIM,
         cache_key=lloyd_cache_key(sf_dir, "embeddings", "embedding", PQ_QSCALE),
     )
     assigned = int_assign(base, cents).localCheckpoint(eager=False)

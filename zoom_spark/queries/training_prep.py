@@ -961,6 +961,8 @@ def logreg_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank schedule)."""
     import math
 
+    from zoom_spark.operators.sizing import fits_driver
+
     snap9 = lambda v: math.floor(v * 1e9 + 0.5) / 1e9  # noqa: E731
     snap6 = lambda v: math.floor(v * 1e6 + 0.5) / 1e6  # noqa: E731
     ev = load_table(spark, sf_dir, "events")
@@ -991,17 +993,17 @@ def logreg_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         n = feats.count()
         w0 = w1 = w2 = 0.0
-        if n <= 200_000:
+        if fits_driver(n, 3):
             # r14: the z-scored feature frame is MODEL-SIZED (3 doubles
-            # per user; the counted gate fails closed at scale), so the
-            # 20 GD aggregates + the accuracy pass run on ONE collect in
-            # numpy instead of 21 sequential Spark jobs over the cached
-            # frame (the jobs were pure scheduler latency at sf0.1 —
-            # ~3 s for ~10k rows). Value-identical under the declared
-            # tolerance: the per-iteration 9dp weight snap exists
-            # precisely to absorb gradient summation-order/libm drift
-            # (it is what lets the DuckDB oracle replay match), and the
-            # numpy mean/exp sit inside the same drift class.
+            # per user), so the 20 GD aggregates + the accuracy pass
+            # run on ONE collect in numpy instead of 21 sequential
+            # Spark jobs over the cached frame (the jobs were pure
+            # scheduler latency at sf0.1 — ~3 s for ~10k rows).
+            # Value-identical under the declared tolerance: the
+            # per-iteration 9dp weight snap exists precisely to absorb
+            # gradient summation-order/libm drift (it is what lets the
+            # DuckDB oracle replay match), and the numpy mean/exp sit
+            # inside the same drift class.
             import numpy as np
 
             rows = feats.collect()
@@ -4161,15 +4163,11 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint + counted gate: without them the basket self-join ran
     # once per consumer (deg + two degree joins), and the node-sized
     # degree table sort-merge-joined the edge frame twice. |deg| <=
-    # 2 * |e|; fails closed past BCAST_MAX_ROWS. The count materializes
-    # the checkpoint the deg aggregate reads anyway.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # 2 * |e|. The count materializes the checkpoint the deg aggregate
+    # reads anyway.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if 2 * e.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcast_if(2 * e.count())
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -5153,17 +5151,14 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     # norms holds one row per doc — the collected scalar (one cheap agg
     # over the checkpointed tf) gates a broadcast hint for the two
-    # norm lookups against the pair-space frame; checkpointed frames
-    # carry unknown stats, so the planner would sort-merge-join them.
-    # Fails closed to the shuffle join past the row budget.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
-
-    n_docs_val = n_docs.collect()[0]["n"]
-    bc = (
-        (lambda df: F.broadcast(df))
-        if n_docs_val <= BCAST_MAX_ROWS
-        else (lambda df: df)
+    # norm lookups against the pair-space frame.
+    from zoom_spark.operators.sizing import (
+        DRIVER_MAX_CELLS,
+        broadcast_if,
+        fits_driver,
     )
+
+    bc = broadcast_if(n_docs.collect()[0]["n"])
     # round 9: deterministic md5 query batch (~1/16) vs corpus — the
     # production similarity-lookup shape; the fixture's fixed 31-token
     # vocabulary makes the all-pairs posting join inherently quadratic
@@ -5190,16 +5185,12 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-pair dot terms are the same rounded x products; summation-
     # order drift (hash-agg order vs BLAS) is ~1e-16 and both engines
     # already rely on the 6dp output grid absorbing it. Gated on the
-    # COUNTED batch posting size and the query-vocabulary width; past
-    # either budget the r13 posting join runs unchanged — fails
-    # closed at 100 TB.
+    # COUNTED batch postings (a (w, x) pair each) and then on the dense
+    # query matrix (batch docs x query vocabulary); past either budget
+    # the r13 posting join runs unchanged.
     batch_rows = vec.where(qsel).count()
     dots = None
-    # dense-axis cap: the fold materializes (chunk rows) x |q_vocab|
-    # doubles per Arrow chunk — past this width the dense layout stops
-    # making sense and the posting join is the right shape anyway
-    QV_CAP = 4096
-    if batch_rows <= BCAST_MAX_ROWS // 4:
+    if fits_driver(batch_rows, 2):
         # Model-sized: collect the batch's sparse vectors (same idiom
         # as the int-Lloyd centroid collects) and run the corpus-side
         # fold as ONE numpy matmul per Arrow batch (guide §4.2 —
@@ -5220,9 +5211,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_vocab = sorted(
             {e["w"] for r in q_rows for e in r["entries"]}
         )
-        if len(q_vocab) <= QV_CAP:
+        qids = [r["doc_id"] for r in q_rows]
+        if fits_driver(len(qids), len(q_vocab)):
             tid = {w: i for i, w in enumerate(q_vocab)}
-            qids = [r["doc_id"] for r in q_rows]
             import numpy as np
 
             n_v = len(q_vocab)
@@ -5231,7 +5222,9 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for e in r["entries"]:
                     qmat[qi, tid[e["w"]]] = e["x"]
             qid_arr = np.asarray(qids, dtype=np.int64)
-            chunk = max(1, 2_000_000 // max(1, n_v))
+            # each chunk holds a chunk x |q_vocab| corpus matrix and a
+            # chunk x |qids| score matrix: both stay inside the budget
+            chunk = max(1, DRIVER_MAX_CELLS // max(1, n_v, len(qids)))
 
             corpus = vec.groupBy("doc_id").agg(
                 F.collect_list(F.struct("w", "x")).alias("entries")

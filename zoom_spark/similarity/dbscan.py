@@ -49,20 +49,15 @@ def dbscan_2d(
         F.floor(F.col(y_col).cast("double") / eps).alias("cy"),
     ).localCheckpoint(eager=False)
     # One counted gate for every point-bounded broadcast below (base,
-    # core, core_lab, labeled are all <= n_pts rows): checkpointed
-    # frames scan with unknown stats, so the planner otherwise
-    # sort-merge-joins the 9x probe stream and the neighbor frame
-    # against them. The count materializes the checkpoint the probe
-    # build reads anyway; fails closed past BCAST_MAX_ROWS. All
-    # downstream aggregates are integer-exact (counts / min ids), so
-    # the join-strategy change cannot move the result.
-    from zoom_spark.operators.graph import BCAST_MAX_ROWS
+    # core, core_lab, labeled are all <= n_pts rows): without it the
+    # planner sort-merge-joins the 9x probe stream and the neighbor
+    # frame against them. The count materializes the checkpoint the
+    # probe build reads anyway. All downstream aggregates are
+    # integer-exact (counts / min ids), so the join-strategy change
+    # cannot move the result.
+    from zoom_spark.operators.sizing import broadcast_if
 
-    bc = (
-        (lambda d: F.broadcast(d))
-        if base.count() <= BCAST_MAX_ROWS
-        else (lambda d: d)
-    )
+    bc = broadcast_if(base.count())
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     probe = base.select(
         F.col("id").alias("a_id"),

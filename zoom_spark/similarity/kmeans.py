@@ -254,14 +254,6 @@ def _int_mstep_means(assigned: DataFrame) -> dict[int, list[float]]:
     return {r["cell"]: [float(x) for x in r["mean"]] for r in rows}
 
 
-# Row budget for the driver-local int-Lloyd path: the collected base
-# is n_rows x dim int64s (a few MB at the bound) — the same
-# model-artifact size class as the centroid collects the distributed
-# path already does per iteration. Past it, the per-iteration
-# distributed jobs run unchanged (fails closed at 100 TB).
-LLOYD_LOCAL_MAX = 100_000
-
-
 def _int_lloyd_fit_local(
     base: DataFrame, k: int, iters: int
 ) -> list[tuple[int, list[int]]]:
@@ -315,6 +307,8 @@ def int_lloyd_fit(
     seed_order_col: str = "id",
     cache_key: tuple | None = None,
     n_rows: int | None = None,
+    *,
+    dim: int,
 ) -> list[tuple[int, list[int]]]:
     """Integer-exact Lloyd fit over an int_quantize frame: md5-seeded
     (the k smallest md5(id) vectors, reproducible in ANSI SQL unlike
@@ -327,10 +321,11 @@ def int_lloyd_fit(
     (plus any quantization params); when given, the fit is memoized in
     _LLOYD_FIT_CACHE under (cache_key, k, iters, seed_order_col).
     ``n_rows``: row count if the caller already knows it (skips one
-    count job used only to size the working frame)."""
+    count job used only to size the working frame). ``dim``: the
+    vector width, which sizes the driver-local gate in cells."""
     import math as _math
 
-    from zoom_spark.operators.sizing import frame_partitions
+    from zoom_spark.operators.sizing import fits_driver, frame_partitions
 
     memo_key = None
     if cache_key is not None:
@@ -348,16 +343,16 @@ def int_lloyd_fit(
     sc = base.sparkSession.sparkContext
     if n_rows is None:
         n_rows = base.count()
-    if n_rows <= LLOYD_LOCAL_MAX and seed_order_col == "id":
-        # r14: a model-sized quantized base (the gate fails closed at
-        # scale) trains faster with ONE collect + numpy than with
-        # iters sequential Spark jobs (each job was ~1.2 s of
-        # scheduler + interpreted-HOF latency on a 2000-row frame at
-        # sf0.1). Bitwise-identical arithmetic: int64 dots/norms are
-        # exact, np.argmin takes the FIRST minimum (cents sorted by
-        # cell id = the lowest-id tie-break), the M-step divides the
-        # exact int sum by the count in the same IEEE double division,
-        # and seeds order by the same (md5(str(id)), id) key.
+    if fits_driver(n_rows, dim) and seed_order_col == "id":
+        # r14: a model-sized quantized base trains faster with ONE
+        # collect + numpy than with iters sequential Spark jobs (each
+        # job was ~1.2 s of scheduler + interpreted-HOF latency on a
+        # 2000-row frame at sf0.1). Bitwise-identical arithmetic:
+        # int64 dots/norms are exact, np.argmin takes the FIRST
+        # minimum (cents sorted by cell id = the lowest-id tie-break),
+        # the M-step divides the exact int sum by the count in the
+        # same IEEE double division, and seeds order by the same
+        # (md5(str(id)), id) key.
         cents = _int_lloyd_fit_local(base, k, iters)
         if memo_key is not None:
             _LLOYD_FIT_CACHE[memo_key] = cents
